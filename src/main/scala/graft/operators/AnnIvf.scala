@@ -496,8 +496,8 @@ object AnnIvf {
   }
 
   /** The 1-row meta sidecar sibling of `vectorsPath`, None when absent or
-    * unreadable — THE sidecar-read primitive every layout check shares
-    * ([[layoutSnapshot]], [[assertLayoutUnchanged]], [[layoutCodec]]). */
+    * unreadable — the sidecar read of the append-contract checks
+    * ([[layoutSnapshot]], [[assertLayoutUnchanged]]). */
   private def readMetaRow(spark: SparkSession, vectorsPath: String)
       : Option[org.apache.spark.sql.Row] = {
     val p = new org.apache.hadoop.fs.Path(vectorsPath)
@@ -508,31 +508,6 @@ object AnnIvf {
       try Some(spark.read.parquet(metaPath.toString).head())
       catch { case _: org.apache.spark.sql.AnalysisException => None }
   }
-
-  /** Footer-inference codec from the vectors dir's column names — THE
-    * single suffix-matching site (a future codec is added here and in
-    * [[codecFromMeta]], nowhere else). sq8 needs its trained bounds,
-    * which only the sidecar holds — `metaRow` is by-name so callers that
-    * already read it don't pay twice and raw/fp16 never read it. */
-  private def inferCodecFromCols(cols: Array[String], vectorsPath: String,
-      metaRow: => Option[org.apache.spark.sql.Row]): StorageCodec =
-    if (cols.exists(_.endsWith(Fp16Suffix))) StorageCodec.Fp16
-    else if (cols.exists(_.endsWith(Sq8Suffix)))
-      StorageCodec.Sq8(boundsFromMeta(metaRow.getOrElse(sys.error(
-        s"sq8-packed layout at $vectorsPath has no meta sidecar — the " +
-          "trained per-dim bounds live there and appends cannot be " +
-          "encoded without them"))))
-    else StorageCodec.Raw
-
-  /** Detect the stored codec of the vectors dir at `vectorsPath` (the
-    * meta sidecar is its sibling, per [[write]]'s layout contract). Raw
-    * when the dir doesn't exist yet OR exists but holds no readable data
-    * files — the first append defines it either way. An sq8-suffixed dir
-    * whose meta sidecar is missing raises a descriptive error (the
-    * trained bounds are unrecoverable without it). */
-  def layoutCodec(spark: SparkSession, vectorsPath: String): StorageCodec =
-    inferCodecFromCols(vectorCols(spark, vectorsPath), vectorsPath,
-      readMetaRow(spark, vectorsPath))
 
   /** Point-in-time append contract of a durable layout: stored codec,
     * write salt, and whether the meta sidecar existed. A live appender
@@ -550,77 +525,76 @@ object AnnIvf {
     case StorageCodec.Sq8(_) => "sq8"
   }
 
-  /** Per-dim trained sq8 bounds from a meta sidecar row — the single
-    * extraction point for [[write]]'s bounds encoding (four call sites:
-    * snapshot, drift check, [[read]], [[rebalance]]). */
-  private[operators] def boundsFromMeta(m: org.apache.spark.sql.Row)
-      : graft.functions.SQ8.Bounds =
-    graft.functions.SQ8.Bounds(
-      m.getAs[Seq[Float]]("sq8_vmin").toArray,
-      m.getAs[Seq[Float]]("sq8_vmax").toArray)
+  /** The meta sidecar [[write]] persists, decoded. */
+  private final case class Meta(
+      writeSalt: Int, nlist: Long, maxPid: Int, codec: StorageCodec)
 
-  /** Codec from a sidecar row carrying the persisted codec name; None for
-    * LEGACY sidecars written before the name existed (callers fall back
-    * to footer inference). An UNKNOWN name raises loudly — defaulting it
-    * to raw would let an appender write raw floats into a layout packed
-    * by a newer codec, the exact NULL-vector schema fork this family of
-    * checks exists to stop. */
-  private def codecFromMeta(m: org.apache.spark.sql.Row, where: String)
-      : Option[StorageCodec] =
-    if (!m.schema.fieldNames.contains("codec")) None
-    else Some(m.getAs[String]("codec") match {
+  /** THE sidecar decoder: every field [[write]] persists (plus the
+    * trained per-dim bounds of an sq8 layout) is required, and a missing
+    * one raises naming it. An UNKNOWN codec name raises too —
+    * defaulting it to raw would let an appender write raw floats into a
+    * layout packed by a newer codec, the exact NULL-vector schema fork
+    * the append-contract checks exist to stop. */
+  private def decodeMeta(m: org.apache.spark.sql.Row, where: String): Meta = {
+    def field[T](name: String): T =
+      try m.getAs[T](name)
+      catch {
+        case _: IllegalArgumentException => sys.error(
+          s"$where: meta sidecar has no '$name' field — every write() " +
+            "persists write_salt, nlist, max_pid and codec; rewrite the " +
+            "layout with write()")
+      }
+    val writeSalt = field[Int]("write_salt")
+    val nlist = field[Long]("nlist")
+    val maxPid = field[Int]("max_pid")
+    val codec = field[String]("codec") match {
       case "raw" => StorageCodec.Raw
       case "fp16" => StorageCodec.Fp16
-      case "sq8" => StorageCodec.Sq8(boundsFromMeta(m))
+      case "sq8" => StorageCodec.Sq8(graft.functions.SQ8.Bounds(
+        field[Seq[Float]]("sq8_vmin").toArray,
+        field[Seq[Float]]("sq8_vmax").toArray))
       case other => sys.error(
         s"$where: unknown stored codec '$other' — the layout was written " +
           "by a newer engine; refusing to guess an append format")
-    })
+    }
+    Meta(writeSalt, nlist, maxPid, codec)
+  }
 
-  /** One sidecar read serves codec (+bounds), salt, and existence — not
-    * three separate reads whose interleavings could mix contracts from
-    * two generations of the layout. The vectors footer is only consulted
-    * when the sidecar is absent or LEGACY (no codec column). A PACKED or
-    * SALTED vectors dir with NO sidecar raises: that is a [[write]] that
+  private def noSidecar(where: String): String =
+    s"layout at $where is packed or salted but has no meta sidecar — a " +
+      "write() crashed between its vectors and meta stages; restore the " +
+      "sidecar (or rewrite the layout) before appending, or the appends " +
+      "fork the on-disk schema"
+
+  /** One sidecar read serves codec (+bounds) and salt — not separate
+    * reads whose interleavings could mix contracts from two generations
+    * of the layout. Without a sidecar the vectors footer decides: a dir
+    * never written (or holding no data) is a raw append target, but a
+    * PACKED or SALTED vectors dir raises — that is a [[write]] that
     * crashed between its vectors and meta stages, and appending into it
     * would fork the on-disk schema (stored files carry `__salt`/packed
     * columns the append would lack). */
   def layoutSnapshot(spark: SparkSession, vectorsPath: String)
-      : LayoutSnapshot = {
-    val metaRow = readMetaRow(spark, vectorsPath)
-    val codec = metaRow
-      .flatMap(codecFromMeta(_, s"layoutSnapshot($vectorsPath)")) match {
-      case Some(c) => c
+      : LayoutSnapshot =
+    readMetaRow(spark, vectorsPath) match {
+      case Some(row) =>
+        val m = decodeMeta(row, s"layoutSnapshot($vectorsPath)")
+        LayoutSnapshot(m.codec, m.writeSalt, hasMeta = true)
       case None =>
         val cols = vectorCols(spark, vectorsPath)
-        val inferred = inferCodecFromCols(cols, vectorsPath, metaRow)
-        if (metaRow.isEmpty &&
-            (inferred != StorageCodec.Raw || cols.contains("__salt")))
-          sys.error(s"layout at $vectorsPath is packed or salted but has " +
-            "no meta sidecar — a write() crashed between its vectors and " +
-            "meta stages; restore the sidecar (or rewrite the layout) " +
-            "before appending, or the appends fork the on-disk schema")
-        inferred
+        if (cols.contains("__salt") ||
+            cols.exists(c => c.endsWith(Fp16Suffix) || c.endsWith(Sq8Suffix)))
+          sys.error(noSidecar(vectorsPath))
+        LayoutSnapshot(StorageCodec.Raw, 1, hasMeta = false)
     }
-    val salt = metaRow.map { r =>
-      if (r.schema.fieldNames.contains("write_salt"))
-        r.getAs[Int]("write_salt")
-      else 1
-    }.getOrElse(1)
-    LayoutSnapshot(codec, salt, metaRow.isDefined)
-  }
 
   /** Raise iff the layout's append contract drifted from `snap`. Cost per
     * call: one filesystem `exists` plus (when a sidecar exists) one 1-row
-    * meta read — never a footer pass over the vectors dir, except for
-    * LEGACY sidecars written before the codec name was persisted, which
-    * fall back to schema inference (so a pre+post-append pair of checks
-    * pays it twice per batch — one [[write]] rewrite persists the codec
-    * name and makes every future check 1-row). A missing sidecar that the snapshot
-    * HAD is retried briefly before raising: [[rebalance]]'s publish swap
-    * leaves a sub-second window where the layout dir is mid-rename, and
-    * a rebalance preserves codec+salt by construction, so waiting it out
-    * is correct. */
+    * meta read — never a footer pass over the vectors dir. A missing
+    * sidecar that the snapshot HAD is retried briefly before raising:
+    * [[rebalance]]'s publish swap leaves a sub-second window where the
+    * layout dir is mid-rename, and a rebalance preserves codec+salt by
+    * construction, so waiting it out is correct. */
   def assertLayoutUnchanged(spark: SparkSession, vectorsPath: String,
       snap: LayoutSnapshot, context: String = ""): Unit = {
     def metaNow(): Option[org.apache.spark.sql.Row] =
@@ -643,27 +617,17 @@ object AnnIvf {
       case (true, None) =>
         fail("the meta sidecar disappeared")
       case (true, Some(row)) =>
-        val names = row.schema.fieldNames
-        val saltNow =
-          if (names.contains("write_salt")) row.getAs[Int]("write_salt")
-          else 1
-        if (saltNow != snap.writeSalt)
-          fail(s"write_salt ${snap.writeSalt} -> $saltNow")
-        val codecNow: StorageCodec =
-          try codecFromMeta(row, s"assertLayoutUnchanged($vectorsPath)")
-            .getOrElse(layoutCodec(spark, vectorsPath)) // legacy sidecar
-          catch {
-            // an unknown persisted codec IS drift here — surface it with
-            // the same framing (and post-append remediation context) as
-            // every other contract change, not a bare unknown-codec error
-            case e: RuntimeException
-                if Option(e.getMessage)
-                  .exists(_.contains("unknown stored codec")) =>
-              fail(e.getMessage)
-          }
-        if (codecTag(codecNow) != codecTag(snap.codec))
-          fail(s"codec ${codecTag(snap.codec)} -> ${codecTag(codecNow)}")
-        (codecNow, snap.codec) match {
+        // a sidecar this engine cannot decode (unknown codec, missing
+        // field) IS drift here — surface it with the same framing (and
+        // post-append remediation context) as every other contract change
+        val now =
+          try decodeMeta(row, s"assertLayoutUnchanged($vectorsPath)")
+          catch { case e: RuntimeException => fail(e.getMessage) }
+        if (now.writeSalt != snap.writeSalt)
+          fail(s"write_salt ${snap.writeSalt} -> ${now.writeSalt}")
+        if (codecTag(now.codec) != codecTag(snap.codec))
+          fail(s"codec ${codecTag(snap.codec)} -> ${codecTag(now.codec)}")
+        (now.codec, snap.codec) match {
           case (StorageCodec.Sq8(a), StorageCodec.Sq8(b))
               if !(java.util.Arrays.equals(a.vmin, b.vmin) &&
                 java.util.Arrays.equals(a.vmax, b.vmax)) =>
@@ -673,23 +637,8 @@ object AnnIvf {
     }
   }
 
-  /** The durable layout's write salt (meta sidecar sibling of
-    * `vectorsPath`), 1 when absent — what an APPENDER consults to stamp
-    * `__salt` on appended rows so the dir keeps one schema. */
-  def layoutWriteSalt(spark: SparkSession, vectorsPath: String): Int = {
-    val p = new org.apache.hadoop.fs.Path(vectorsPath)
-    try {
-      val m = spark.read
-        .parquet(new org.apache.hadoop.fs.Path(p.getParent, "meta").toString)
-        .head()
-      if (m.schema.fieldNames.contains("write_salt"))
-        m.getAs[Int]("write_salt")
-      else 1
-    } catch { case _: org.apache.spark.sql.AnalysisException => 1 }
-  }
-
   /** Pack `vecCol` to the layout's stored codec so appended files share
-    * the on-disk schema ([[layoutCodec]]); sq8 reuses the layout's
+    * the on-disk schema ([[layoutSnapshot]]); sq8 reuses the layout's
     * trained bounds, so the append is encoded exactly like the original
     * write. Raw layouts pass through untouched.
     *
@@ -711,46 +660,45 @@ object AnnIvf {
         graft.functions.SQ8.packCol(b, col(vecCol))).drop(vecCol)
   }
 
+  /** The Index over the stored vectors `raw` of the layout at `path`,
+    * decoded with ONE head() over its 1-row meta sidecar (salt, codec +
+    * sq8 bounds, nlist, max_pid) — shared by [[read]] and [[rebalance]].
+    * Every [[write]] persists the sidecar, so a layout with vectors but
+    * none is a crashed write and is refused. */
+  private def decodeLayout(spark: SparkSession, path: String,
+      raw: DataFrame): (Index, StorageCodec) = {
+    val row =
+      try spark.read.parquet(s"$path/meta").head()
+      catch {
+        case _: org.apache.spark.sql.AnalysisException =>
+          sys.error(noSidecar(s"$path/vectors"))
+      }
+    val meta = decodeMeta(row, s"index at $path")
+    def unpack(suffix: String)(decode: Column => Column): DataFrame = {
+      val packed = raw.columns.find(_.endsWith(suffix)).getOrElse(sys.error(
+        s"index at $path: meta sidecar names codec " +
+          s"'${codecTag(meta.codec)}' but no stored column ends in $suffix"))
+      raw.withColumn(packed.dropRight(suffix.length), decode(col(packed)))
+        .drop(packed)
+    }
+    val assigned = meta.codec match {
+      case StorageCodec.Raw => raw
+      case StorageCodec.Fp16 =>
+        unpack(Fp16Suffix)(graft.functions.FP16.unpackCol)
+      case StorageCodec.Sq8(b) =>
+        unpack(Sq8Suffix)(graft.functions.SQ8.unpackCol(b, _))
+    }
+    (Index(assigned, spark.read.parquet(s"$path/centroids"), meta.writeSalt,
+      nlist = meta.nlist, maxPid = meta.maxPid), meta.codec)
+  }
+
   def read(spark: SparkSession, path: String): Index = {
-    val raw = spark.read.parquet(s"$path/vectors")
-    // ONE head() over the 1-row meta sidecar serves salt, sq8 bounds, and
-    // the persisted nlist/max_pid scalars
-    val meta: Option[org.apache.spark.sql.Row] =
-      try Some(spark.read.parquet(s"$path/meta").head())
-      catch { case _: org.apache.spark.sql.AnalysisException => None } // pre-salt layout
-    def metaField[T](name: String)(get: org.apache.spark.sql.Row => T)
-        : Option[T] =
-      meta.filter(_.schema.fieldNames.contains(name)).map(get)
-    val assigned = raw.columns.find(_.endsWith(Fp16Suffix)) match {
-      case Some(packed) =>
-        raw.withColumn(packed.dropRight(Fp16Suffix.length),
-          graft.functions.FP16.unpackCol(col(packed))).drop(packed)
-      case None =>
-        raw.columns.find(_.endsWith(Sq8Suffix)) match {
-          case Some(packed) =>
-            val b = boundsFromMeta(meta.get)
-            raw.withColumn(packed.dropRight(Sq8Suffix.length),
-              graft.functions.SQ8.unpackCol(b, col(packed))).drop(packed)
-          case None => raw
-        }
-    }
-    val writeSalt = metaField("write_salt")(_.getAs[Int]("write_salt"))
-      .getOrElse(1)
-    val centroids = spark.read.parquet(s"$path/centroids")
-    // serve-cap contract: a meta-carried nlist makes this a free scalar
-    // check; a pre-nlist layout pays the one bounded count
-    val nlist = metaField("nlist")(_.getAs[Long]("nlist")) match {
-      case Some(n) =>
-        requireServeableNlist(n, s"index at $path", ServeNlistCap); n
-      case None =>
-        // under the cap the clipped count IS the exact nlist, so even a
-        // legacy layout leaves read() with known metadata
-        val n = centroids.limit(ServeNlistCap + 1).count()
-        requireServeableNlist(n, s"index at $path", ServeNlistCap)
-        n
-    }
-    Index(assigned, centroids, writeSalt, nlist = nlist,
-      maxPid = metaField("max_pid")(_.getAs[Int]("max_pid")).getOrElse(-1))
+    val (index, _) =
+      decodeLayout(spark, path, spark.read.parquet(s"$path/vectors"))
+    // serve-cap contract: the meta-carried nlist makes this a free
+    // scalar check
+    requireServeableNlist(index.nlist, s"index at $path", ServeNlistCap)
+    index
   }
 
   /** Merge two IVF indexes into one serveable index — the shard-combine
@@ -1001,44 +949,15 @@ object AnnIvf {
     // snapshot-pinned read of the durable layout (same decode path as
     // `read`, but against the listed files so a mid-pass append is
     // excluded here and recovered below)
-    val raw = spark.read.option("basePath", vectorsDir.toString)
-      .parquet(snapshot.map(_.toString): _*)
-    val metaRow: Option[org.apache.spark.sql.Row] =
-      try Some(spark.read.parquet(s"$path/meta").head())
-      catch { case _: org.apache.spark.sql.AnalysisException => None }
-    def metaField[T](name: String)(get: org.apache.spark.sql.Row => T)
-        : Option[T] =
-      metaRow.filter(_.schema.fieldNames.contains(name)).map(get)
-    val packedCol = raw.columns.find(_.endsWith(Fp16Suffix))
-    val sq8Col = raw.columns.find(_.endsWith(Sq8Suffix))
-    // the layout's trained bounds: needed to decode AND reused verbatim
-    // at the rewrite so decode→re-encode is bit-stable (no codec drift
-    // across repeated rebalances)
-    val sq8Bounds = sq8Col.map { _ =>
-      boundsFromMeta(metaRow.getOrElse(sys.error(
-        s"rebalance: sq8-packed layout at $path has no meta sidecar")))
-    }
-    val assigned = (packedCol, sq8Col) match {
-      case (Some(packed), _) =>
-        raw.withColumn(packed.dropRight(Fp16Suffix.length),
-          graft.functions.FP16.unpackCol(col(packed))).drop(packed)
-      case (None, Some(packed)) =>
-        raw.withColumn(packed.dropRight(Sq8Suffix.length),
-          graft.functions.SQ8.unpackCol(sq8Bounds.get, col(packed)))
-          .drop(packed)
-      case (None, None) => raw
-    }
-    val writeSalt = metaField("write_salt")(_.getAs[Int]("write_salt"))
-      .getOrElse(1)
-    val index = Index(assigned,
-      spark.read.parquet(s"$path/centroids"), writeSalt,
-      nlist = metaField("nlist")(_.getAs[Long]("nlist")).getOrElse(-1L),
-      maxPid = metaField("max_pid")(_.getAs[Int]("max_pid")).getOrElse(-1))
+    val (index, codec) = decodeLayout(spark, path,
+      spark.read.option("basePath", vectorsDir.toString)
+        .parquet(snapshot.map(_.toString): _*))
     // rebalance bypasses read() (snapshot-pinned file list), so the
     // serve-cap contract is re-asserted here — this IS an entry point an
-    // Index has into a session; exactNlist uses the meta scalar when the
-    // layout carries one (no Spark job), else one bounded count
-    val cellsBefore = exactNlist(index, s"index at $path (rebalance)", cap)
+    // Index has into a session; the meta-carried nlist makes it a scalar
+    // check
+    requireServeableNlist(index.nlist, s"index at $path (rebalance)", cap)
+    val cellsBefore = index.nlist
     def hotCount(ix: Index): Long =
       ix.assigned.groupBy("partition_id").agg(count(lit(1)).as("__n"))
         .filter(col("__n") > maxCellRows).count()
@@ -1052,9 +971,16 @@ object AnnIvf {
     val staging = new org.apache.hadoop.fs.Path(
       target.getParent, s".${target.getName}__rebalancing")
     fs.delete(staging, true)
-    write(rebalanced, staging.toString, writeSalt,
-      fp16 = packedCol.isDefined, vecCol = vecCol,
-      sq8 = sq8Col.isDefined, sq8BoundsOpt = sq8Bounds)
+    // the layout's trained sq8 bounds are reused verbatim so
+    // decode→re-encode is bit-stable (no codec drift across repeated
+    // rebalances)
+    val sq8Bounds = codec match {
+      case StorageCodec.Sq8(b) => Some(b)
+      case _ => None
+    }
+    write(rebalanced, staging.toString, index.writeSalt,
+      fp16 = codec == StorageCodec.Fp16, vecCol = vecCol,
+      sq8 = sq8Bounds.isDefined, sq8BoundsOpt = sq8Bounds)
     onStaged()
     val retired = new org.apache.hadoop.fs.Path(
       target.getParent, s".${target.getName}__retired")
@@ -1080,7 +1006,6 @@ object AnnIvf {
     }
     fs.delete(retired, true)
     val published = read(spark, path)
-    // read() always leaves nlist known (meta scalar or the bounded count)
     RebalanceStats(cellsBefore, published.nlist,
       hotBefore, hotCount(published), recovered)
   }

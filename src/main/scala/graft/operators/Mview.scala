@@ -53,22 +53,14 @@ object Mview {
     * shuffle-free. Union-then-reaggregate keeps the merge associative and
     * idempotent-per-batch rather than hand-writing a full-outer-join
     * coalesce dance. */
-  def merge(state: DataFrame, deltaState: DataFrame, groupCols: Seq[String]): DataFrame = {
-    // allowMissingColumns + coalesce(nv, n): a durable state written by a
-    // pre-`nv` engine lacks the non-null count; treating its rows as
-    // all-non-null (nv = n) reproduces that state's own historical avg
-    // semantics until it is rebuilt
-    val withNv = (df: DataFrame) =>
-      if (df.columns.contains("nv")) df
-      else df.withColumn("nv", col("n"))
-    withNv(state).unionByName(withNv(deltaState))
+  def merge(state: DataFrame, deltaState: DataFrame, groupCols: Seq[String]): DataFrame =
+    state.unionByName(deltaState)
       .groupBy(groupCols.map(col): _*).agg(
         sum(col("n")).as("n"),
         sum(col("nv")).as("nv"),
         sum(col("sum_dec")).as("sum_dec"),
         min(col("mn")).as("mn"),
         max(col("mx")).as("mx"))
-  }
 
   /** Per-group change set between two states (old → new): groups whose
     * count or exact-decimal sum moved, with deltas — the validation /
@@ -132,19 +124,16 @@ object Mview {
 
   /** Final measures from the partials (sum/avg as exact-decimal-backed
     * doubles, rounded for replay parity). */
-  def result(state: DataFrame, groupCols: Seq[String]): DataFrame = {
-    // legacy state (no nv): fall back to n, the pre-nv semantics
-    val nv = if (state.columns.contains("nv")) col("nv") else col("n")
+  def result(state: DataFrame, groupCols: Seq[String]): DataFrame =
     state.select(
       groupCols.map(col) ++ Seq[Column](
         col("n"),
         col("sum_dec").cast(DoubleType).as("sum_value"),
         // SQL AVG semantics: nulls excluded from the mean; all-null
         // group -> NULL (never a 0/0 ANSI division error)
-        when(nv > 0,
-          round(col("sum_dec").cast(DoubleType) / nv, 4))
+        when(col("nv") > 0,
+          round(col("sum_dec").cast(DoubleType) / col("nv"), 4))
           .as("avg_value"),
         col("mn").as("min_value"),
         col("mx").as("max_value")): _*)
-  }
 }

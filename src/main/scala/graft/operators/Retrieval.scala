@@ -258,14 +258,6 @@ object Retrieval {
     } finally dl.unpersist(blocking = false)
     writeManifest(fs, path, next, Seq(next))
     publishLatest(fs, path, next)
-    // flat dirs are dead once ANY generation is published — retire them
-    // so a later pointer loss can't silently revive the stale
-    // pre-migration index through the legacy fallback. Unconditional (4
-    // exists probes when there's nothing to do): a crash mid-retirement
-    // at gen 0 must not strand the remaining flat dirs forever — the
-    // first-generation-only call never retried, so doclen/df/stats
-    // residue accumulated as dead weight
-    retireFlatLayout(fs, path)
   }
 
   /** Stats row: the two doubles the score expression reads, plus the
@@ -296,40 +288,22 @@ object Retrieval {
     val terms = queryTerms.distinct
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (postingsRaw, dfPath, statsPath, legacyDoclen) =
-      latestGen(fs, path) match {
-        case Some(gen) =>
-          val batches = readManifest(fs, path, gen)
-          (spark.read.parquet(
-             batches.map(k => s"$path/data/postings/batch-$k"): _*),
-           s"$path/gen-$gen/df", s"$path/gen-$gen/stats", None)
-        case None =>
-          // LEGACY flat layout (pre-generation): serve-only support.
-          // Pointer-less generation dirs are damage, not legacy — refuse
-          refuseIfPointerlessGenerations(fs, path)
-          assertNoTornAppend(spark, path)
-          (spark.read.parquet(s"$path/postings"),
-           s"$path/df", s"$path/stats", Some(s"$path/doclen"))
-      }
-    val postings = postingsRaw.filter(col("term").isin(terms: _*))
-    val dfc = spark.read.parquet(dfPath)
+    val gen = requireLatestGen(fs, path, "searchIndex")
+    val postings = spark.read.parquet(
+        readManifest(fs, path, gen).map(k => s"$path/data/postings/batch-$k"): _*)
       .filter(col("term").isin(terms: _*))
-    val stats = spark.read.parquet(statsPath).select("__n", "__avgdl")
-    // generation postings always carry __dl denormalized — the query
-    // path is then pushdown-pruned postings only. LEGACY flat layouts
-    // without it fall back to the doclen join (corpus-sized — rebuild
-    // the index to shed it); either way only df (≤|terms| rows) and
-    // stats (1 row) get broadcast hints — a stopword query term makes
-    // the filtered postings corpus-sized, so forcing a broadcast there
-    // would be the classic 100×-scale failure (AQE broadcasts it anyway
+    val dfc = spark.read.parquet(s"$path/gen-$gen/df")
+      .filter(col("term").isin(terms: _*))
+    val stats = spark.read.parquet(s"$path/gen-$gen/stats")
+      .select("__n", "__avgdl")
+    // postings carry __dl denormalized, so the query path is
+    // pushdown-pruned postings only. Only df (≤|terms| rows) and stats
+    // (1 row) get broadcast hints — a stopword query term makes the
+    // filtered postings corpus-sized, so forcing a broadcast there would
+    // be the classic 100×-scale failure (AQE broadcasts it anyway
     // whenever the term set is genuinely selective)
-    val withDl =
-      if (postings.columns.contains("__dl")) postings
-      else postings.join(
-        spark.read.parquet(legacyDoclen.getOrElse(sys.error(
-          s"index at $path: generation postings missing __dl"))), Seq(idCol))
     sumTerms(idCol)(
-      withDl.join(broadcast(dfc), Seq("term"))
+      postings.join(broadcast(dfc), Seq("term"))
         .crossJoin(broadcast(stats))
         .withColumn("__ts", bm25TermScore(k1, b)))
   }
@@ -359,11 +333,7 @@ object Retrieval {
     * Single-maintainer discipline (like `AnnIvf.rebalance`): one appender
     * at a time; feed only genuinely-new ids (route through
     * `Ingest.newRecords`/`newRecordsBloom` upstream for idempotence).
-    * LEGACY flat layouts (pre-generation `postings/` at the top level)
-    * are refused loudly — their postings may predate the denormalized
-    * `__dl` column, and appending would fork the parquet schema mid-dir
-    * (old rows would read `__dl = null` and silently mis-score);
-    * rebuild with [[writeIndex]] to migrate. After the call,
+    * A layout without a `_LATEST` pointer is refused. After the call,
     * [[searchIndex]]/[[loadProfile]] results are BIT-IDENTICAL to an
     * index built from scratch on the full corpus (RetrievalSpec). */
   def appendToIndex(
@@ -374,12 +344,7 @@ object Retrieval {
     val spark = newDocs.sparkSession
     val hconf = spark.sparkContext.hadoopConfiguration
     val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(hconf)
-    val gen = latestGen(fs, path).getOrElse(sys.error(
-      s"appendToIndex: $path is not a generation-versioned index " +
-        "(no _LATEST pointer). Legacy flat layouts cannot be appended " +
-        "to — their postings schema may lack the denormalized __dl " +
-        "column, and appending would fork the parquet dir schema so " +
-        "old documents silently mis-score. Rebuild with writeIndex."))
+    val gen = requireLatestGen(fs, path, "appendToIndex")
     val batches = readManifest(fs, path, gen)
     val next = gen + 1L
     val toks = TextOps.tokens(col(textCol))
@@ -451,13 +416,7 @@ object Retrieval {
     * restores the aggressive everything-but-live prune. Orphan gen dirs
     * ABOVE the live pointer (a crashed append's debris) are always
     * removed — they were never published, so no reader can hold them.
-    * Retired legacy flat dirs (`_retired-flat/`, see [[writeIndex]]) are
-    * removed for good — and stranded TOP-LEVEL flat dirs (a crash
-    * mid-retirement moved some but not all of them) are retired first,
-    * so legacy residue can never outlive the janitor: a generation
-    * layout being live (the `_LATEST` pointer this janitor requires)
-    * means every flat dir is definitionally dead. Run from the single
-    * maintainer, like [[appendToIndex]].
+    * Run from the single maintainer, like [[appendToIndex]].
     *
     * `minAgeMs` is the AGE floor (Delta VACUUM's second knob): a
     * generation whose publish is younger than the floor survives
@@ -480,8 +439,7 @@ object Retrieval {
       s"pruneIndex: minAgeMs must be >= 0 (got $minAgeMs)")
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val gen = latestGen(fs, path).getOrElse(sys.error(
-      s"pruneIndex: $path is not a generation-versioned index"))
+    val gen = requireLatestGen(fs, path, "pruneIndex")
     val published = {
       val p = new org.apache.hadoop.fs.Path(path)
       fs.listStatus(p).map(_.getPath.getName)
@@ -526,13 +484,6 @@ object Retrieval {
     val keepBatch = (s: String) => s.toLongOption.exists(liveBatch.contains)
     pruneDir(s"$path/data/postings", "batch-", keepBatch)
     pruneDir(s"$path/data/doclen", "batch-", keepBatch)
-    // stranded flat residue (a crash mid-retirement moved postings but
-    // not doclen/df/stats): retire the leftovers into _retired-flat,
-    // then remove _retired-flat for good — safe here because this
-    // janitor required a live _LATEST above, so the flat layout is dead
-    retireFlatLayout(fs, path)
-    val retired = new org.apache.hadoop.fs.Path(path, "_retired-flat")
-    if (fs.exists(retired)) { fs.delete(retired, true); removed += 1 }
     removed
   }
 
@@ -542,8 +493,7 @@ object Retrieval {
   def livePostingsPaths(spark: SparkSession, path: String): Seq[String] = {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val gen = latestGen(fs, path).getOrElse(sys.error(
-      s"livePostingsPaths: $path is not a generation-versioned index"))
+    val gen = requireLatestGen(fs, path, "livePostingsPaths")
     readManifest(fs, path, gen).map(k => s"$path/data/postings/batch-$k")
   }
 
@@ -558,64 +508,7 @@ object Retrieval {
   private def latestPointer(path: String): org.apache.hadoop.fs.Path =
     new org.apache.hadoop.fs.Path(path, "_LATEST")
 
-  /** Guard for the no-`_LATEST` reader path: generation dirs WITHOUT a
-    * pointer and WITHOUT a flat layout to fall back to mean the pointer
-    * is damaged (or a migration retired the flat dirs and the pointer
-    * was then lost) — refuse loudly rather than serving nothing or, on
-    * a layout whose flat dirs were left in place, silently serving the
-    * STALE pre-migration index. A flat layout alongside gen dirs is the
-    * one legitimate in-between: a first-generation rebuild in progress
-    * (or crashed before its publish) over a live legacy index — the
-    * legacy data is still the truth, so the fallback serves it. */
-  private def refuseIfPointerlessGenerations(
-      fs: org.apache.hadoop.fs.FileSystem, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val hasGen = fs.exists(p) &&
-      fs.listStatus(p).exists(_.getPath.getName.startsWith("gen-"))
-    val hasFlat = fs.exists(new org.apache.hadoop.fs.Path(path, "postings"))
-    if (hasGen && !hasFlat) sys.error(
-      s"index at $path has generation dirs but no _LATEST pointer and " +
-        "no flat layout — the pointer is damaged, was deleted after " +
-        "migration, or a FIRST build is still in progress (its publish " +
-        "is the last step). Refusing to guess a generation (serving an " +
-        "arbitrary one could return stale scores); wait for the build, " +
-        "restore _LATEST (one line: the live generation number), or " +
-        "rebuild with writeIndex.")
-  }
-
-  /** Once any generation is published over a legacy flat layout, move
-    * the flat dirs out of the reader probe paths (into `_retired-flat/`,
-    * removed for good by [[pruneIndex]]): left in place, a later pointer
-    * loss would silently serve the stale pre-migration index through the
-    * legacy fallback. Runs strictly AFTER the `_LATEST` publish (every
-    * [[writeIndex]] publish, and again from [[pruneIndex]] so a crash
-    * mid-retirement cannot strand residue forever), so a crash anywhere
-    * in here leaves a fully served generation layout plus dead flat
-    * dirs — never a torn read.
-    *
-    * QUIET-WINDOW posture (one-time migration event, recorded in
-    * COVERAGE.md): a legacy reader that planned over `$path/postings`
-    * just before the first-generation publish has its files renamed out
-    * from under its scan — a LOUD missing-files failure, never a wrong
-    * answer. Same single-maintainer/quiet-window family as the janitor:
-    * migrate during a window with no live legacy readers. */
-  private def retireFlatLayout(
-      fs: org.apache.hadoop.fs.FileSystem, path: String): Unit = {
-    val retired = new org.apache.hadoop.fs.Path(path, "_retired-flat")
-    Seq("postings", "doclen", "df", "stats").foreach { d =>
-      val src = new org.apache.hadoop.fs.Path(path, d)
-      if (fs.exists(src)) {
-        fs.mkdirs(retired)
-        val dst = new org.apache.hadoop.fs.Path(retired, d)
-        fs.delete(dst, true) // a crashed earlier retirement's partial copy
-        require(fs.rename(src, dst),
-          s"Retrieval: cannot retire legacy dir $src -> $dst")
-      }
-    }
-    fs.delete(new org.apache.hadoop.fs.Path(path, "_APPEND_INPROGRESS"), false)
-  }
-
-  /** Live generation number, if `path` is a generation-versioned layout. */
+  /** Live generation number, if `path` has a `_LATEST` pointer. */
   private def latestGen(fs: org.apache.hadoop.fs.FileSystem,
       path: String): Option[Long] = {
     val p = latestPointer(path)
@@ -629,12 +522,24 @@ object Retrieval {
     }
   }
 
+  /** Live generation number of an existing index. `_LATEST` is the only
+    * commit point, so a layout without it — a first build still running
+    * or crashed before its publish, or a lost pointer — is refused
+    * rather than served from a guessed generation. */
+  private def requireLatestGen(fs: org.apache.hadoop.fs.FileSystem,
+      path: String, site: String): Long =
+    latestGen(fs, path).getOrElse(sys.error(
+      s"$site: index at $path has no _LATEST pointer — a first build is " +
+        "still in progress (its publish is the last step), crashed, or " +
+        "the pointer was lost. Refusing to guess a generation; restore " +
+        "_LATEST (one line: the live generation number) or rebuild with " +
+        "writeIndex."))
+
   /** Swing `_LATEST` to `gen` — write-temp-then-ATOMIC-OVERWRITE-rename.
     * Not `create(p, true)`: an in-place overwrite truncates the LIVE
     * pointer the moment create() opens it. And not delete-then-rename:
     * that leaves a window with NO pointer at all, in which a crash or a
-    * concurrent reader sees a pointer-less layout — a refusal at best,
-    * a silent fallback to retired flat dirs at worst.
+    * concurrent reader sees a pointer-less layout and is refused.
     * `FileContext.rename(OVERWRITE)` replaces the pointer in one step. */
   private def publishLatest(fs: org.apache.hadoop.fs.FileSystem,
       path: String, gen: Long): Unit =
@@ -658,18 +563,6 @@ object Retrieval {
     raw.split("\n").map(_.trim.toLong).toSeq
   }
 
-  /** Raise if a crashed pre-generation append left a LEGACY flat layout
-    * torn (postings possibly appended, df/stats stale) — serving it would
-    * return silently wrong scores. Generation layouts cannot tear. */
-  private def assertNoTornAppend(spark: SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path, "_APPEND_INPROGRESS")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) sys.error(
-      s"legacy index at $path has a live _APPEND_INPROGRESS marker — an " +
-        "append crashed mid-update and postings/df/stats may disagree; " +
-        "rebuild with writeIndex before serving")
-  }
-
   /** A STANDING query frozen for scan-local scoring: the query terms with
     * their corpus document frequencies plus the corpus stats — everything
     * BM25 needs, in O(|terms|) driver memory. */
@@ -691,17 +584,12 @@ object Retrieval {
     val terms = queryTerms.distinct
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (dfPath, statsPath) = latestGen(fs, path) match {
-      case Some(gen) => (s"$path/gen-$gen/df", s"$path/gen-$gen/stats")
-      case None =>
-        refuseIfPointerlessGenerations(fs, path)
-        assertNoTornAppend(spark, path)
-        (s"$path/df", s"$path/stats")
-    }
-    val dfc = spark.read.parquet(dfPath)
+    val gen = requireLatestGen(fs, path, "loadProfile")
+    val dfc = spark.read.parquet(s"$path/gen-$gen/df")
       .filter(col("term").isin(terms: _*))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val st = spark.read.parquet(statsPath).select("__n", "__avgdl").head()
+    val st = spark.read.parquet(s"$path/gen-$gen/stats")
+      .select("__n", "__avgdl").head()
     QueryProfile(dfc, st.getDouble(0), st.getDouble(1), k1, b)
   }
 

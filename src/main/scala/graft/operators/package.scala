@@ -41,9 +41,8 @@ package object operators {
     * ATOMIC OVERWRITE rename. Not `create(dst, true)`: an in-place
     * overwrite truncates the LIVE file the moment create() opens it. And
     * not delete-then-rename: that leaves a window with NO file at all, in
-    * which a crash makes readers see a fresh/legacy layout and silently
-    * reset or mis-serve (the exact failure the pointer exists to
-    * prevent). `FileContext.rename(OVERWRITE)` replaces in one step.
+    * which a crash makes readers see a fresh layout and silently reset
+    * (the exact failure the pointer exists to prevent). `FileContext.rename(OVERWRITE)` replaces in one step.
     *
     * FILESYSTEM CONTRACT: the one-step replacement is atomic only where
     * the filesystem's rename is — HDFS, posix-local, ADLS Gen2 (abfs,
@@ -116,7 +115,7 @@ package object operators {
             "enabled, which this probe cannot see)" else "") +
           " — the torn window the atomic rename exists to close re-opens " +
           "inside the connector; a crash mid-publish can leave readers " +
-          "refusing (or, pre-migration, serving stale data). " +
+          "refusing. " +
           (if (site == "publishPointerAtomic")
             "Host _LATEST pointers on a rename-atomic store (HDFS, " +
               "posix, ADLS Gen2) or front them with a manifest service."

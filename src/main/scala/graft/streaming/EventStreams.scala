@@ -517,9 +517,7 @@ object EventStreams {
       .map { case (seq, _, _) => spark.read.parquet(s"$statePath/v$seq") }
 
   /** `_LATEST` pointer: 3 lines — version seq, last applied batch id,
-    * run key. A legacy 1-line pointer (batch id only, pre-runKey format)
-    * reads as seq = batchId with an unknown run key, so nothing after an
-    * upgrade is mistaken for a replay. */
+    * run key. Any other shape is a damaged pointer and raises. */
   private def mviewPointer(spark: org.apache.spark.sql.SparkSession,
       statePath: String): Option[(Long, Long, String)] = {
     val fs = org.apache.hadoop.fs.FileSystem.get(
@@ -554,8 +552,10 @@ object EventStreams {
         finally in.close()
       raw.split("\n").map(_.trim) match {
         case Array(seq, id, key) => Some((seq.toLong, id.toLong, key))
-        case Array(legacy) => Some((legacy.toLong, legacy.toLong, ""))
-        case other => Some((other(0).toLong, other(1).toLong, ""))
+        case other => sys.error(
+          s"mview state at $statePath has a damaged _LATEST pointer " +
+            s"(${other.length} line(s), expected 3: seq, batch id, run " +
+            "key) — restore it or move the old versions away")
       }
     }
   }

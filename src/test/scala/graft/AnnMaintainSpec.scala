@@ -431,23 +431,6 @@ class AnnMaintainSpec extends SparkSpec {
       split.centroids.agg(max("partition_id")).head().getInt(0))
   }
 
-  test("a legacy meta sidecar without nlist falls back to the bounded count") {
-    val (idx, _) = drifted
-    val dir = java.nio.file.Files.createTempDirectory("legacymeta").toString
-    AnnIvf.write(idx, dir, writeSalt = 2)
-    // rewrite the meta sidecar in the pre-r13 shape (write_salt only)
-    Seq(2).toDF("write_salt").coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/meta")
-    val rt = AnnIvf.read(spark, dir)
-    assert(rt.writeSalt === 2)
-    assert(rt.nlist === 3L) // recovered by the bounded count
-    assert(rt.maxPid === -1) // unknown — recomputed lazily if ever needed
-    // and a metadata-less index still merges correctly via the fallbacks
-    val m = AnnIvf.merge(rt, rt)
-    assert(m.nlist === 6L)
-    assert(m.centroids.select("partition_id").distinct().count() === 6L)
-  }
-
   test("degenerate-split no-op carries nlist AND maxPid forward") {
     // a hot cell of value-identical vectors cannot split (the r12 guard),
     // so splitHotCells takes the splits-empty early return — which by
@@ -506,16 +489,21 @@ class AnnMaintainSpec extends SparkSpec {
       assert(tagged.get() === 0,
         s"metadata merge scheduled ${tagged.get()} Spark job(s)")
       assert(m.nlist === ia.nlist + ib.nlist)
-      // legacy control: stripped metadata must pay the bounded counts —
-      // the detector sees jobs when jobs happen
+      // metadata-less control: stripped metadata must pay the bounded
+      // counts — the detector sees jobs when jobs happen
       val la = AnnIvf.Index(ia.assigned, ia.centroids, ia.writeSalt)
       val lb = AnnIvf.Index(ib.assigned, ib.centroids, ib.writeSalt)
       spark.sparkContext.setJobGroup(tag, tag)
-      try AnnIvf.merge(la, lb)
-      finally spark.sparkContext.clearJobGroup()
+      val lm =
+        try AnnIvf.merge(la, lb)
+        finally spark.sparkContext.clearJobGroup()
       flush()
       assert(tagged.get() > 0,
-        "legacy merge should have paid bounded counts (negative control)")
+        "metadata-less merge should have paid bounded counts " +
+          "(negative control)")
+      // and the counted path renumbers exactly like the carried one
+      assert(lm.nlist === 4L && lm.maxPid === m.maxPid)
+      assert(lm.centroids.select("partition_id").distinct().count() === 4L)
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 }

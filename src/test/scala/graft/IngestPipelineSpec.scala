@@ -362,6 +362,14 @@ class IngestPipelineSpec extends SparkSpec {
       AnnIvf.layoutSnapshot(spark, s"$d2/vectors")
     }
     assert(e2.getMessage.contains("no meta sidecar"), e2.getMessage)
+    // read and rebalance refuse the same crashed write rather than
+    // guessing its salt, codec or nlist
+    val e3 = intercept[RuntimeException](AnnIvf.read(spark, d1))
+    assert(e3.getMessage.contains("no meta sidecar"), e3.getMessage)
+    val e4 = intercept[RuntimeException] {
+      AnnIvf.rebalance(spark, d2, "vec_id", "embedding", maxCellRows = 60L)
+    }
+    assert(e4.getMessage.contains("no meta sidecar"), e4.getMessage)
     // a NEVER-written dir stays a fine append target (first append
     // defines the layout)
     val d3 = Files.createTempDirectory("halfwritten-raw").toString
@@ -395,39 +403,30 @@ class IngestPipelineSpec extends SparkSpec {
     assert(e2.getMessage.contains("unknown stored codec 'pq9'"), e2.getMessage)
   }
 
-  test("drift check on a LEGACY sidecar (no codec column) never false-raises") {
-    // layouts written before r13 persisted the codec name lack the sidecar
-    // `codec` column; assertLayoutUnchanged must fall back to footer
-    // inference for those instead of raising — a live stream over an old
-    // layout keeps running across upgrades
+  test("a meta sidecar missing a field is refused, naming the field") {
+    // every write() persists write_salt, nlist, max_pid and codec; a
+    // sidecar without one is not a layout this engine reads — no reader
+    // infers the codec from the vectors footer or recounts nlist
     val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
     val idx = AnnIvf.build(emb.filter($"vec_id" < 200), "vec_id",
       "embedding", nlist = 2, seed = 7L)
-    val dir = Files.createTempDirectory("legacy-meta").toString
-    AnnIvf.write(idx, dir, writeSalt = 2, fp16 = true)
-    // strip the codec column in place — the pre-r13 sidecar shape
-    val legacy = spark.read.parquet(s"$dir/meta").drop("codec").collect()
-    val legacySchema = spark.read.parquet(s"$dir/meta").drop("codec").schema
-    spark.createDataFrame(
-        java.util.Arrays.asList(legacy: _*), legacySchema)
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
-    val snap = AnnIvf.layoutSnapshot(spark, s"$dir/vectors")
-    assert(snap.codec === AnnIvf.StorageCodec.Fp16)
-    assert(snap.writeSalt === 2 && snap.hasMeta)
-    // the happy path must NOT raise: the fallback infers fp16 from the
-    // vectors footer and matches the snapshot
-    AnnIvf.assertLayoutUnchanged(spark, s"$dir/vectors", snap)
-    // and real drift is still caught through the fallback
-    AnnIvf.write(idx, dir, writeSalt = 2, sq8 = true)
-    val legacy2 = spark.read.parquet(s"$dir/meta").drop("codec").collect()
-    val legacySchema2 = spark.read.parquet(s"$dir/meta").drop("codec").schema
-    spark.createDataFrame(
-        java.util.Arrays.asList(legacy2: _*), legacySchema2)
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
-    val e = intercept[RuntimeException] {
-      AnnIvf.assertLayoutUnchanged(spark, s"$dir/vectors", snap)
+    for (field <- Seq("codec", "nlist")) {
+      val dir = Files.createTempDirectory(s"meta-no-$field").toString
+      AnnIvf.write(idx, dir, writeSalt = 2, fp16 = true)
+      val snap = AnnIvf.layoutSnapshot(spark, s"$dir/vectors")
+      val stripped = spark.read.parquet(s"$dir/meta").drop(field)
+      val (rows, schema) = (stripped.collect(), stripped.schema)
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
+      Seq[() => Any](
+        () => AnnIvf.read(spark, dir),
+        () => AnnIvf.layoutSnapshot(spark, s"$dir/vectors"),
+        () => AnnIvf.assertLayoutUnchanged(spark, s"$dir/vectors", snap))
+        .foreach { call =>
+          val e = intercept[RuntimeException](call())
+          assert(e.getMessage.contains(s"no '$field' field"), e.getMessage)
+        }
     }
-    assert(e.getMessage.contains("codec fp16 -> sq8"), e.getMessage)
   }
 
   test("sq8 drift metric rides the append: zero extra Spark jobs when enabled") {

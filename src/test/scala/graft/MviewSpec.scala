@@ -31,8 +31,7 @@ class MviewSpec extends SparkSpec {
       collectState(Mview.init(li, keys, "l_extendedprice")))
   }
 
-  test("avg excludes null measures (SQL AVG), all-null group is NULL, " +
-      "legacy nv-less state merges") {
+  test("avg excludes null measures (SQL AVG), all-null group is NULL") {
     val df = Seq(
       ("a", Some(10.0)), ("a", None),
       ("b", Option.empty[Double]))
@@ -44,14 +43,6 @@ class MviewSpec extends SparkSpec {
     // sum skips nulls: avg must divide by the NON-null count, not n
     assert(res("a") === ((2L, Some(10.0))))
     assert(res("b") === ((1L, None))) // all-null -> NULL, not 0/0 error
-    // a durable state written by a pre-nv engine merges (nv backfills
-    // from n — that state's own historical semantics)
-    val legacy = Mview.init(df.filter($"v".isNotNull), Seq("k"), "v")
-      .drop("nv")
-    val merged = Mview.merge(legacy,
-      Mview.init(df.filter($"v".isNull), Seq("k"), "v"), Seq("k"))
-    assert(Mview.result(merged, Seq("k")).filter($"k" === "a")
-      .select("avg_value").as[Double].head() === 10.0)
   }
 
   test("merge is associative: ((a+b)+c) == (a+(b+c))") {

@@ -156,34 +156,6 @@ class RetrievalSpec extends SparkSpec {
     assert(incr.toSeq === full.toSeq)
   }
 
-  test("legacy flat layout: served read-only (doclen fallback), append refused") {
-    // hand-build the pre-generation layout, postings WITHOUT __dl — the
-    // shape appendToIndex must refuse (appending __dl-carrying rows would
-    // fork the parquet dir schema and silently mis-score old docs)
-    val p = java.nio.file.Files.createTempDirectory("retr-idx-legacy").toString
-    val t = docs.select($"doc_id", explode(split($"text", " ")).as("term"))
-    val dl = t.groupBy("doc_id").agg(count(lit(1)).as("__dl"))
-    t.groupBy("term", "doc_id").agg(count(lit(1)).as("tf"))
-      .write.parquet(s"$p/postings")
-    t.groupBy("term").agg(countDistinct($"doc_id").as("df"))
-      .write.parquet(s"$p/df")
-    dl.write.parquet(s"$p/doclen")
-    dl.agg(
-        count(lit(1)).cast("double").as("__n"),
-        (sum($"__dl").cast("double") / count(lit(1))).as("__avgdl"))
-      .write.parquet(s"$p/stats")
-    val terms = qTerms.as[String].collect().toSeq
-    val legacy = Retrieval.searchIndex(spark, p, "doc_id", terms)
-      .select("doc_id", "bm25").as[(Long, Double)].collect().sortBy(_._1)
-    val inline = Retrieval.bm25(docs, "doc_id", "text", qTerms)
-      .select("doc_id", "bm25").as[(Long, Double)].collect().sortBy(_._1)
-    assert(legacy.toSeq === inline.toSeq)
-    val e = intercept[RuntimeException] {
-      Retrieval.appendToIndex(docs.limit(1), "doc_id", "text", p)
-    }
-    assert(e.getMessage.contains("Rebuild with writeIndex"), e.getMessage)
-  }
-
   test("pruneIndex removes superseded generations and orphan batches; " +
       "serving is unchanged") {
     val p = java.nio.file.Files.createTempDirectory("retr-idx-prune").toString
@@ -271,84 +243,23 @@ class RetrievalSpec extends SparkSpec {
       after.contains("gen-2"), after)
   }
 
-  test("stranded flat residue (crash mid-retirement) is cleaned by the " +
-      "next publish and by the janitor") {
-    val p = java.nio.file.Files.createTempDirectory("retr-idx-residue").toString
-    Retrieval.writeIndex(docs, "doc_id", "text", p) // gen 0, nothing to retire
-    // simulate a crashed retirement's leftovers: postings moved, the
-    // rest stranded at the top level (the ADVICE shape — the old
-    // first-generation-only retirement never retried them)
-    for (d <- Seq("doclen", "df", "stats")) {
-      val dir = new java.io.File(p, d)
-      dir.mkdirs()
-      java.nio.file.Files.write(dir.toPath.resolve("part-stale.parquet"),
-        Array[Byte](1, 2, 3))
-    }
-    // a subsequent rebuild (gen 1) retires the residue out of the probe
-    // paths even though it is not the first generation
+  test("a lost _LATEST pointer refuses instead of guessing a generation") {
+    val p = java.nio.file.Files.createTempDirectory("retr-idx-nopointer").toString
     Retrieval.writeIndex(docs, "doc_id", "text", p)
-    val dirs = new java.io.File(p).listFiles().map(_.getName).toSet
-    assert(!dirs.contains("doclen") && !dirs.contains("df") &&
-      !dirs.contains("stats"), s"flat residue survived a rebuild: $dirs")
-    // and the janitor path alone also cleans residue (including
-    // _retired-flat itself) when a generation layout is live
-    new java.io.File(p, "stats").mkdirs()
-    assert(Retrieval.pruneIndex(spark, p) >= 1)
-    val after = new java.io.File(p).listFiles().map(_.getName).toSet
-    assert(!after.contains("stats") && !after.contains("_retired-flat"),
-      s"janitor left flat residue: $after")
-  }
-
-  test("migration retires the flat layout; a lost pointer then refuses " +
-      "instead of silently serving the stale legacy index") {
-    val p = java.nio.file.Files.createTempDirectory("retr-idx-migrate").toString
-    // legacy flat index over HALF the corpus — the stale data a lost
-    // pointer must never silently revive
-    val half1 = docs.filter($"doc_id" % 2 === 1)
-    val t = half1.select($"doc_id", explode(split($"text", " ")).as("term"))
-    val dl = t.groupBy("doc_id").agg(count(lit(1)).as("__dl"))
-    t.groupBy("term", "doc_id").agg(count(lit(1)).as("tf"))
-      .write.parquet(s"$p/postings")
-    t.groupBy("term").agg(countDistinct($"doc_id").as("df"))
-      .write.parquet(s"$p/df")
-    dl.write.parquet(s"$p/doclen")
-    dl.agg(
-        count(lit(1)).cast("double").as("__n"),
-        (sum($"__dl").cast("double") / count(lit(1))).as("__avgdl"))
-      .write.parquet(s"$p/stats")
-    // migrate: first generation over the legacy layout, FULL corpus
-    Retrieval.writeIndex(docs, "doc_id", "text", p)
-    val terms = qTerms.as[String].collect().toSeq
-    val got = Retrieval.searchIndex(spark, p, "doc_id", terms)
-      .select("doc_id", "bm25").as[(Long, Double)].collect().sortBy(_._1)
-    val full = Retrieval.searchIndex(spark, indexPath, "doc_id", terms)
-      .select("doc_id", "bm25").as[(Long, Double)].collect().sortBy(_._1)
-    assert(got.toSeq === full.toSeq)
-    val dirs = new java.io.File(p).listFiles().map(_.getName).toSet
-    assert(!dirs.contains("postings") && dirs.contains("_retired-flat"),
-      s"flat dirs not retired: $dirs")
-    // pointer lost after migration: refuse loudly — the legacy fallback
-    // (which would serve half1's STALE scores) must not fire
     new java.io.File(p, "_LATEST").delete()
-    val e = intercept[RuntimeException] {
-      Retrieval.searchIndex(spark, p, "doc_id", terms).collect()
+    // generation dirs without the pointer: the live generation is unknown,
+    // and serving (or appending to, or pruning) a guessed one could
+    // return stale scores — every entry point refuses loudly
+    val terms = qTerms.as[String].collect().toSeq
+    Seq[() => Any](
+      () => Retrieval.searchIndex(spark, p, "doc_id", terms).collect(),
+      () => Retrieval.loadProfile(spark, p, terms),
+      () => Retrieval.appendToIndex(docs.limit(1), "doc_id", "text", p),
+      () => Retrieval.pruneIndex(spark, p),
+      () => Retrieval.livePostingsPaths(spark, p)).foreach { call =>
+      val e = intercept[RuntimeException](call())
+      assert(e.getMessage.contains("no _LATEST pointer"), e.getMessage)
     }
-    assert(e.getMessage.contains("no _LATEST pointer"), e.getMessage)
-    val e2 = intercept[RuntimeException] {
-      Retrieval.loadProfile(spark, p, terms)
-    }
-    assert(e2.getMessage.contains("no _LATEST pointer"), e2.getMessage)
-  }
-
-  test("pruneIndex removes retired flat dirs for good") {
-    val p = java.nio.file.Files.createTempDirectory("retr-idx-retire").toString
-    docs.limit(3).select($"doc_id", lit(1L).as("tf"),
-        explode(split($"text", " ")).as("term"))
-      .write.parquet(s"$p/postings") // any flat debris
-    Retrieval.writeIndex(docs, "doc_id", "text", p)
-    assert(new java.io.File(p, "_retired-flat").exists())
-    assert(Retrieval.pruneIndex(spark, p) >= 1)
-    assert(!new java.io.File(p, "_retired-flat").exists())
   }
 
   test("rebuild over a live index supersedes it atomically") {

@@ -705,6 +705,16 @@ class StreamingSpec extends SparkSpec {
       EventStreams.mviewState(spark, statePath)
     }
     assert(e.getMessage.contains("no _LATEST"), e.getMessage)
+    // a pointer that is not the 3-line (seq, batch id, run key) format
+    // is damage too: never read as a version number
+    val pointer = new org.apache.hadoop.fs.Path(statePath, "_LATEST")
+    val out = pointer.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .create(pointer, true)
+    try out.write("0".getBytes("UTF-8")) finally out.close()
+    val e2 = intercept[RuntimeException] {
+      EventStreams.mviewState(spark, statePath)
+    }
+    assert(e2.getMessage.contains("damaged _LATEST pointer"), e2.getMessage)
   }
 
   test("mview damage detection: debris named exactly \"v\" does not make a fresh dir refuse") {
